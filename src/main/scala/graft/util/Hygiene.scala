@@ -313,4 +313,7 @@ object CacheOnce {
     * the bench/verify inter-query sweep so a frame that was built but never
     * executed cannot leak its listener (and cache entry) for the session. */
   def sweepAll(): Unit = pending.forEach(f => f())
+
+  /** Hooks still waiting for their consuming action. */
+  private[graft] def pendingCount: Int = pending.size
 }

@@ -11,10 +11,20 @@ class QueryRegistrySpec extends SparkSpec {
     assert(names.forall(_.matches("q\\d+[a-z0-9_]*")))
   }
 
-  test("FileStreamQueries names all exist in the registry (Bench pre-stage gate)") {
-    val names = SparkEntry.registry.map(_.name).toSet
-    val missing = graft.streaming.StreamingOps.FileStreamQueries.filterNot(names)
-    assert(missing.isEmpty, s"stale FileStreamQueries entries: $missing")
+  // hard-coded name lists the harness mains act on: a renamed query must
+  // fail here, not drop silently out of Bench's pre-stage or staging
+  // warm-ups or crash the plan dump
+  for ((list, listed) <- Seq(
+      "StreamingOps.FileStreamQueries" ->
+        graft.streaming.StreamingOps.FileStreamQueries.toSeq,
+      "Bench.StagedFixtureQueries" -> Bench.StagedFixtureQueries,
+      "PlanDump.DefaultQueries" -> PlanDump.DefaultQueries)) {
+    test(s"$list names all exist in the registry and are distinct") {
+      val names = SparkEntry.registry.map(_.name).toSet
+      val missing = listed.filterNot(names)
+      assert(missing.isEmpty, s"stale $list entries: $missing")
+      assert(listed.distinct === listed, s"duplicate $list entries")
+    }
   }
 
   test("every query has a doc string; oracles are non-empty SQL") {
