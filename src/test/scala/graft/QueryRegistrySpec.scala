@@ -14,9 +14,13 @@ class QueryRegistrySpec extends SparkSpec {
   // hard-coded name lists the harness mains act on: a renamed query must
   // fail here, not drop silently out of Bench's pre-stage or staging
   // warm-ups or crash the plan dump
+  test("FileStreamQueries names all exist in the registry (Bench pre-stage gate)") {
+    val names = SparkEntry.registry.map(_.name).toSet
+    val missing = graft.streaming.StreamingOps.FileStreamQueries.filterNot(names)
+    assert(missing.isEmpty, s"stale FileStreamQueries entries: $missing")
+  }
+
   for ((list, listed) <- Seq(
-      "StreamingOps.FileStreamQueries" ->
-        graft.streaming.StreamingOps.FileStreamQueries.toSeq,
       "Bench.StagedFixtureQueries" -> Bench.StagedFixtureQueries,
       "PlanDump.DefaultQueries" -> PlanDump.DefaultQueries)) {
     test(s"$list names all exist in the registry and are distinct") {
