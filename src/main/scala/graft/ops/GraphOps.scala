@@ -51,29 +51,6 @@ object GraphOps {
     * graph's diameter at every test SF; unreached nodes stay unlabeled. */
   val BfsRounds = 4
 
-  /** The q326 zero-exchange gate pair, shared by the q130/q176 array
-    * tiers: under [[lpaBroadcastNodes]] AND a dense id domain, a per-round
-    * O(V) vector (labels, ranks, distances) ships as one
-    * `Broadcast[Array[Long]]` resolved by a codegen array index inside the
-    * round's own aggregate over destination-partitioned cached edges —
-    * nothing O(E) crosses the wire after the one-time repartition. Past
-    * either gate the callers keep their original one-shuffle-per-round BSP
-    * loop (the shape that holds at any scale). */
-  private def arrayTier(s: org.apache.spark.sql.SparkSession,
-                        nNodes: Long, maxId: Long): Boolean =
-    nNodes > 0 && nNodes <= lpaBroadcastNodes(s) && maxId >= 0 &&
-      maxId < s.conf.getOption("graft.lpa.denseIdBound").map(_.toLong)
-        .getOrElse(2L * lpaBroadcastNodes(s))
-
-  /** `arr(c)` under a broadcast primitive long array ([[org.apache.spark.sql.graft.LabelArrayLookup]]
-    * — generic long-array index, named for its first adopter). */
-  private def arrayLookup(
-      bc: org.apache.spark.broadcast.Broadcast[Array[Long]],
-      c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-    org.apache.spark.sql.graft.GraftShim.column(
-      org.apache.spark.sql.graft.LabelArrayLookup(
-        org.apache.spark.sql.graft.GraftShim.expression(c), bc))
-
   /** k-core peel rounds (q310) — fixed so engine and oracle agree whether
     * or not the fixpoint is reached; production loops to a zero-delta. */
   val KCoreRounds = 6
@@ -157,51 +134,17 @@ object GraphOps {
       "q130_pagerank",
       s"All-integer PageRank ($Iters rounds, damping 0.85, mass 1e12 units) over the undirected part↔supplier co-occurrence graph from lineitem: each round is one rank⋈edges equi-join + one groupBy(dst) long-sum — O(E) shuffle of 8-byte values, the BSP shape that holds at any graph scale. Every contribution is a long floor-division, so ranks are exact integers: no float summation order to diverge between engines, partitionings or cluster sizes. Top-20 hubs with a total (rank, id) order.",
       pagerankSql) { (s, d) =>
-      // the edge list feeds every round — materialize once, hash-partitioned
-      // ON THE SOURCE (r20, guide §2.4): u-partitioning serves BOTH tiers.
-      // The array-tier round groups by u and resolves v's contribution by
-      // broadcast array index (≡ the old groupBy(v)+lookup(u) because the
-      // frame is symmetric: it holds (a,b) iff (b,a)), so it stays
-      // exchange-free; and the FALLBACK's per-round rank⋈edges join on u now
-      // inherits the cached partitioning too, so past the gate only the O(V)
-      // rank frame moves per round — the r19 fallback re-shuffled O(E) edges
-      // every round against a v-partitioned cache. Plain persist, not
-      // persistForOneAction: the array tier below runs one action per round
-      // and the harness's inter-query sweep reclaims the cache (q326's Lpa
-      // contract).
-      val ed = Tables.lineitem(s, d)
-        .select((col("l_partkey") * 2).as("u"), (col("l_suppkey") * 2 + 1).as("v"))
-        .distinct()
-      val nEdge = graft.util.Sizing.exchangePartitions(s,
-        2L * graft.util.Sizing.parquetRowCount(d, "lineitem"))
-      val edges = ed.unionAll(ed.select(col("v").as("u"), col("u").as("v")))
-        .repartition(nEdge, col("u")).persist()
-      // in-degree == out-degree on the symmetrized frame: grouping by u is
-      // exchange-free over the u-partitioned cache and yields the identical
-      // degree census the original groupBy(v) computed. Persisted (O(V)):
-      // the gate head, the array tier's collect and the fallback's per-round
-      // rank rebuilds all re-aggregated it from the O(E) cache before (r20)
-      val degF = edges.groupBy(col("u")).agg(count(lit(1)).as("deg")).persist()
-      // one plan-time sizing head(): node count (broadcast gate) + max id
-      // (dense-id gate) — the q326 Lpa gate pair
-      val gate = degF.agg(count(lit(1)), coalesce(max(col("u")), lit(-1L))).head()
-      val (nNodes, maxId) = (gate.getLong(0), gate.getLong(1))
-      if (arrayTier(s, nNodes, maxId)) {
-        // ZERO-EXCHANGE round (the q326 array tier generalized from labels
-        // to rank mass): the O(V) per-node contribution vector rides a
-        // Broadcast[Array[Long]] resolved by a codegen array index inside
-        // the round's own aggregate — nothing O(E) crosses the wire after
-        // the one-time repartition, and the O(V) collect per round is
-        // exactly what the engine's own broadcast build would do, minus
-        // the V-entry UnsafeRow hash relation. Arithmetic is the same
-        // all-positive long floor-division chain, so ranks are
-        // bit-identical to the join/aggregate fallback below.
-        // (Primitive collects throughout — guide §5: the boxed Row path
-        // transiently allocated ~10× the 16 payload bytes per node on the
-        // driver, which at the 4M-node gate is hundreds of MB per round.)
-        val deg = new Array[Long](maxId.toInt + 1)
-        graft.util.DriverCollect.foreachLongPair(degF)((u, dg) =>
-          deg(u.toInt) = dg)
+      // both tiers run over the EdgeSet's u-partitioned symmetric cache:
+      // the array round groups by u and looks up v's contribution; the
+      // fallback's per-round rank⋈edges join on u moves only the O(V)
+      // rank frame
+      val g = bipartiteGraph(s, d)
+      val (edges, degF, nNodes, maxId) = (g.edges, g.degrees, g.nNodes, g.maxId)
+      if (g.arrayTier) {
+        // the per-node contribution vector rides the EdgeSet array tier;
+        // arithmetic is the same all-positive long floor-division chain, so
+        // ranks are bit-identical to the join/aggregate fallback below
+        val deg = g.degArray
         val base0 = 1000000000000L / nNodes
         val base = 150000000000L / nNodes
         var rank = Array.tabulate(maxId.toInt + 1)(i =>
@@ -222,7 +165,7 @@ object GraphOps {
           val next = new Array[Long](maxId.toInt + 1)
           try graft.util.DriverCollect.foreachLongPair(
             edges.groupBy(col("u"))
-              .agg(sum(arrayLookup(bc, col("v"))).as("c")))((v, c) =>
+              .agg(sum(EdgeSet.lookup(bc, col("v"))).as("c")))((v, c) =>
             next(v.toInt) = base + c)
           finally bc.destroy()
           rank = next
@@ -232,10 +175,8 @@ object GraphOps {
           .map(i => (i.toLong, rank(i))).toArray
           .sortBy { case (u, r) => (-r, u) }
           .take(20)
-        // the result is a driver-side literal — nothing below references
-        // the caches, so reclaim them here (r19 verdict hygiene item)
-        degF.unpersist(false)
-        edges.unpersist(false)
+        // the result is a driver-side literal: nothing below reads the caches
+        g.release()
         import s.implicits._
         top.toSeq.toDF("node_id", "rank_e12")
       } else {
@@ -268,44 +209,28 @@ object GraphOps {
       "q176_bfs_distances",
       s"BFS shortest-path distances ($BfsRounds rounds) from the minimum-id node over the part↔supplier graph — the frontier formulation: each round unions the current label frame with neighbors-at-distance+1 and keeps min(d) per node, a map-side-combinable aggregate. One O(E) equi-join + one min-agg per round (the BSP shape), `localCheckpoint` truncating the lineage between rounds exactly like q83's label propagation; labels are longs, never paths. (A frontier-only variant with per-round anti-joins was measured ~25% SLOWER here: this graph is dense bipartite — the frontier IS the graph by round 2, so the anti-join/distinct shuffles buy nothing; keep frontier-only for high-diameter graphs, min-agg for dense ones.) Output: the distance histogram — reach of each BFS ring.",
       bfsSql) { (s, d) =>
-      val ed = Tables.lineitem(s, d)
-        .select((col("l_partkey") * 2).as("u"), (col("l_suppkey") * 2 + 1).as("v"))
-        .distinct()
-      // source-partitioned persisted edges + the q326 gate pair, as in q130
-      // (r20): under the gate each round is ONE zero-exchange aggregate over
-      // the cache (groupBy(u) + lookup(v) ≡ the old groupBy(v) + lookup(u)
-      // on the symmetric frame); past it, the union+min-agg BSP loop's
-      // frontier join keys on u and now inherits the cached partitioning —
-      // only the O(V) distance frame moves per round
-      val nEdge = graft.util.Sizing.exchangePartitions(s,
-        2L * graft.util.Sizing.parquetRowCount(d, "lineitem"))
-      val edges = ed.unionAll(ed.select(col("v").as("u"), col("u").as("v")))
-        .repartition(nEdge, col("u")).persist()
-      // persisted O(V): gate head + array-tier collect were two O(E) cache
-      // aggregates before (r20)
-      val degF = edges.groupBy(col("u")).agg(count(lit(1)).as("deg")).persist()
-      val gate = degF.agg(count(lit(1)), coalesce(max(col("u")), lit(-1L))).head()
-      val (nNodes, maxId) = (gate.getLong(0), gate.getLong(1))
-      if (arrayTier(s, nNodes, maxId)) {
+      // under the EdgeSet array gate each round is ONE zero-exchange
+      // aggregate over the cache; past it, the union+min-agg BSP loop's
+      // frontier join keys on u, so only the O(V) distance frame moves
+      val g = bipartiteGraph(s, d)
+      val (edges, degF, maxId) = (g.edges, g.degrees, g.maxId)
+      if (g.arrayTier) {
         // dist'(v) = min(dist(v), 1 + min over in-neighbors u of dist(u)) —
         // identical to the fallback's union+min-agg round because the
         // unreached sentinel is larger than any reachable distance, so it
         // never wins a min against a real frontier value
         val Inf = Long.MaxValue / 4
-        val deg = new Array[Long](maxId.toInt + 1)
-        graft.util.DriverCollect.foreachLongPair(degF)((u, dg) =>
-          deg(u.toInt) = dg)
+        val deg = g.degArray
         var dist = Array.tabulate(maxId.toInt + 1)(i =>
           if (deg(i) > 0) Inf else 0L)
-        // seed = min node id (first assigned slot of the dense domain)
-        dist((0 to maxId.toInt).find(deg(_) > 0).get) = 0L
+        dist(g.minId.toInt) = 0L // seed = min node id
         for (_ <- 1 to BfsRounds) {
           val bc = s.sparkContext.broadcast(dist)
           // groupBy(u) + lookup(v) ≡ groupBy(v) + lookup(u): symmetric frame
           val next = dist.clone()
           try graft.util.DriverCollect.foreachLongPair(
             edges.groupBy(col("u"))
-              .agg(min(arrayLookup(bc, col("v"))).as("md")))((v, md) => {
+              .agg(min(EdgeSet.lookup(bc, col("v"))).as("md")))((v, md) => {
             val cand = md + 1
             if (cand < next(v.toInt)) next(v.toInt) = cand
           })
@@ -318,9 +243,7 @@ object GraphOps {
           .groupBy(identity).toSeq
           .map { case (dd, vs) => (dd, vs.size.toLong) }
           .sortBy(_._1)
-        // driver-side literal result: reclaim the caches here
-        degF.unpersist(false)
-        edges.unpersist(false)
+        g.release() // driver-side literal result
         import s.implicits._
         hist.toDF("dist", "n_nodes").orderBy(col("dist"))
       } else {
@@ -342,10 +265,9 @@ object GraphOps {
             .groupBy(col("u")).agg(min(col("d")).as("d"))
             .localCheckpoint()
         }
-        // the final frame is checkpointed — its lineage no longer touches
-        // the caches, so reclaim them here
-        degF.unpersist(false)
-        edges.unpersist(false)
+        // the final frame is checkpointed: its lineage no longer reads the
+        // caches
+        g.release()
         dist.groupBy(col("d").as("dist"))
           .agg(count(lit(1)).as("n_nodes"))
           .orderBy(col("dist"))
@@ -508,33 +430,17 @@ object GraphOps {
       "q310_kcore_peeling",
       s"k-core decomposition by iterative peeling ($KCoreRounds fixed BSP rounds) over the part↔supplier co-occurrence graph — the dense-subgraph extractor pipelines run to isolate the mutually-reinforcing cluster (spam/bot rings, template farms) that degree alone can't find: k is DATA-DRIVEN (the lower-median degree, by cumulative selection over the bounded degree histogram — q208's threshold doctrine, so the cut adapts to any SF), each round keeps only edges whose BOTH endpoints still meet deg >= k and re-derives survivor degrees — two O(E) semi-join-shaped equi-joins + one count aggregate per round, localCheckpoint truncating lineage exactly like q176. The fixed round count makes engine and oracle bit-identical whether or not the fixpoint has been reached (production loops until a 1-row delta count hits zero); the census emits each round's surviving nodes/directed edges plus an id checksum, so a single wrongly-peeled node fails the gate.",
       kcoreSql) { (s, d) =>
-      val ed = Tables.lineitem(s, d)
-        .select((col("l_partkey") * 2).as("u"), (col("l_suppkey") * 2 + 1).as("v"))
-        .distinct()
-      // source-partitioned persisted edges + the q326 gate pair (the
-      // q130/q176 shape, r20): peeling is MONOTONE, so round i's edge frame
-      // is the ORIGINAL frame filtered by the current survivor set — under
-      // the gate each round is one zero-exchange filter+aggregate over the
-      // cache with the survivor set broadcast as a primitive array, and
-      // nothing O(E) crosses the wire after the one-time repartition; the
-      // fallback's first per-round semi-join keys on u and inherits the
-      // cache too (see the alternating-key loop below)
-      val nEdge = graft.util.Sizing.exchangePartitions(s,
-        2L * graft.util.Sizing.parquetRowCount(d, "lineitem"))
-      val edges = ed.unionAll(ed.select(col("v").as("u"), col("u").as("v")))
-        .repartition(nEdge, col("u")).persist()
-      // in-degree == out-degree on the symmetric frame: groupBy(u) is
-      // exchange-free over the cache and equals the original groupBy(v).
-      // Persisted O(V): gate head + array collect / fallback threshold were
-      // separate O(E) cache aggregates before (r20)
-      val degF = edges.groupBy(col("u")).agg(count(lit(1)).as("deg")).persist()
-      val gateR = degF.agg(count(lit(1)), coalesce(max(col("u")), lit(-1L))).head()
-      val (nNodes, maxId) = (gateR.getLong(0), gateR.getLong(1))
-      if (arrayTier(s, nNodes, maxId)) {
+      // peeling is MONOTONE, so round i's edge frame is the ORIGINAL frame
+      // filtered by the current survivor set: under the EdgeSet array gate
+      // each round is one zero-exchange filter+aggregate over the cache with
+      // the survivor set as a broadcast array; the fallback's first
+      // per-round semi-join keys on u and inherits the cache too (see the
+      // alternating-key loop below)
+      val g = bipartiteGraph(s, d)
+      val (edges, degF, nNodes) = (g.edges, g.degrees, g.nNodes)
+      if (g.arrayTier) {
         import s.implicits._
-        val deg0 = new Array[Long](maxId.toInt + 1)
-        graft.util.DriverCollect.foreachLongPair(degF)((u, dg) =>
-          deg0(u.toInt) = dg)
+        val deg0 = g.degArray
         // lower-median k by the same cumulative selection over the degree
         // histogram, in exact integers (the frame below replicates it 1:1)
         val histo = scala.collection.immutable.SortedMap.empty[Long, Long] ++
@@ -566,13 +472,12 @@ object GraphOps {
             // groupBy(u) over the u-partitioned cache (the filter condition
             // is symmetric, so the filtered frame stays symmetric and the
             // u-census equals the v-census); primitive collect per §5
-            val degI = new Array[Long](maxId.toInt + 1)
-            try graft.util.DriverCollect.foreachLongPair(
-              edges.filter(arrayLookup(bc, col("u")) === 1L &&
-                  arrayLookup(bc, col("v")) === 1L)
-                .groupBy(col("u")).agg(count(lit(1)).as("deg")))((u, dg) =>
-              degI(u.toInt) = dg)
-            finally bc.destroy()
+            val degI =
+              try g.collect(
+                edges.filter(EdgeSet.lookup(bc, col("u")) === 1L &&
+                    EdgeSet.lookup(bc, col("v")) === 1L)
+                  .groupBy(col("u")).agg(count(lit(1)).as("deg")))
+              finally bc.destroy()
             val r = censusOf(degI)
             surv = degI.map(dg => if (dg >= k) 1L else 0L)
             converged =
@@ -580,9 +485,7 @@ object GraphOps {
             rows += ((i, r._1, r._2, r._3))
           }
         }
-        // driver-side literal result: reclaim the caches here
-        degF.unpersist(false)
-        edges.unpersist(false)
+        g.release() // driver-side literal result
         rows.toSeq.toDF("round", "n_nodes", "n_edges", "sum_nodes")
           .orderBy(col("round"))
       } else {
@@ -675,8 +578,7 @@ object GraphOps {
       // the round caches, so reclaim them here instead of leaking them to
       // the harness sweep (r19 verdict hygiene item)
       owned.foreach(_.unpersist(false))
-      degF.unpersist(false)
-      edges.unpersist(false)
+      g.release()
       import s.implicits._
       rows.toSeq.toDF("round", "n_nodes", "n_edges", "sum_nodes")
         .orderBy(col("round"))
@@ -687,11 +589,7 @@ object GraphOps {
       "q326_label_propagation",
       s"Label-propagation community detection ($LpaRounds fixed synchronous BSP rounds) over the part↔supplier co-occurrence graph — the near-linear community finder (Raghavan et al.) pipelines run where modularity solvers don't scale: every node starts as its own label and each round adopts the MOST FREQUENT label among its neighbors, ties broken by smallest label — the (count DESC, label ASC) order is total, so the update is bit-identical across engines and partitionings (async/random-order LPA is not reproducible; the synchronous total-order form is; the oracle states it as a row_number over each node's neighbor-label census). Per round the engine pays ZERO exchanges under the node-count gate (≤4M nodes): the O(V) label frame BROADCASTS into the join against edges persisted hash-partitioned on the adopting node, the broadcast join preserves that partitioning, and groupBy(node) feeds the native LabelModeAgg (exact degree-bounded label→count map, map-side-merged; q212's bounded-aggregate doctrine — the census+argmax two-shuffle forms this replaces are pinned bit-identical in KernelSpec) partial+final in the SAME stage — nothing O(E) crosses the wire after the one-time repartition; past the gate it degrades to the one-exchange-per-round shuffle form (v-partitioned edges, label frame moves, census exchange on node). localCheckpoint truncates each round's O(V) lineage, short-circuit once the full-assignment xor fingerprint repeats (a true fixpoint: the update is a deterministic function of the assignment). The per-round census (distinct labels, assignment checksum, largest community) makes a single wrongly-adopted label fail the gate — and on this BIPARTITE graph it records synchronous LPA's known two-coloring oscillation, which the q333 modularity eval quantifies at Q = −0.5 (see there; the pair demonstrates detection, and that production projects to one mode first).",
       lpaSql) { (s, d) =>
-      val ps = Tables.lineitem(s, d)
-        .select((col("l_partkey") * 2).as("u"), (col("l_suppkey") * 2 + 1).as("v"))
-        .distinct()
-      val lpa = new Lpa(ps)
-      var lab = lpa.lab0
+      val lpa = new Lpa(bipartiteEdges(s, d))
       // one groupBy(lab) frame yields the whole census: group count =
       // n_labels, max group size = largest community, the assignment
       // checksum sum-over-nodes(lab) = sum-over-labels(lab·size) — plus an
@@ -709,15 +607,15 @@ object GraphOps {
             coalesce(expr("bit_xor(x)"), lit(0L))).head()
         (round, r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))
       }
-      val outRows = if (lpa.arrayTier) {
+      val outRows = if (lpa.g.arrayTier) {
         // array tier (r20): rounds run assignment-array → assignment-array
         // (ONE job each), censuses computed driver-side from the same
         // array, fixpoint by exact array equality. Round 0 is the identity
         // assignment, whose census is (nodeCount, Σ node ids, 1) — already
         // known from the gate aggregate, no job at all.
         val rows = scala.collection.mutable.ArrayBuffer(
-          (0, lpa.nodeCount, lpa.nodeIdSum,
-            if (lpa.nodeCount == 0L) 0L else 1L))
+          (0, lpa.g.nNodes, lpa.g.idSum,
+            if (lpa.g.nNodes == 0L) 0L else 1L))
         var arr: Array[Long] = null
         var converged = false
         for (i <- 1 to LpaRounds) {
@@ -745,6 +643,7 @@ object GraphOps {
         }
         rows.toSeq
       } else {
+        var lab = lpa.lab0
         val rows = scala.collection.mutable.ArrayBuffer(censusOf(0, lab))
         var converged = false
         for (i <- 1 to LpaRounds) {
@@ -764,10 +663,9 @@ object GraphOps {
         }
         rows.toSeq.map(t => (t._1, t._2, t._3, t._4))
       }
-      // the census rows are plain driver tuples — nothing below references
-      // the edge cache, so reclaim it here instead of leaking it to the
-      // harness sweep (the q310 hygiene precedent)
-      lpa.e.unpersist(false)
+      // the census rows are plain driver tuples: nothing below reads the
+      // caches
+      lpa.release()
       import s.implicits._
       outRows
         .toDF("round", "n_labels", "sum_labels", "max_comm")
@@ -778,7 +676,7 @@ object GraphOps {
       "q333_lpa_modularity",
       s"Newman modularity of the q326 label-propagation partition — the metric that says whether the communities MEAN anything (Q compares internal-edge mass to the degree-preserving random expectation), in EXACT integer arithmetic: Q = (2m·Σᵢc − Σ d_c²) / (4m²) where Σᵢc counts DIRECTED same-label edge endpoints (so the ÷2 for undirected internal edges cancels against 2m — no halving anywhere) and d_c is each community's degree mass; the single floor-division happens once, offset positive first because Q can be negative and Spark's `div` truncates toward zero while DuckDB's `//` floors — they agree only on non-negatives (Q ≥ −1 bounds the shift). On THIS graph the metric reads exactly −0.5, the floor of Q's range — the textbook signature of synchronous LPA's bipartite two-coloring oscillation (labels ping-pong between the part and supplier sides, so internal-edge mass is ZERO): catching that pathology is precisely why a structure finder ships with its measured quality number (q266's recall-eval doctrine applied to communities — a pipeline gates on Q and learns it must PROJECT a bipartite graph to one mode, q208's wedge tier, before community detection). Cost beyond the $LpaRounds LPA rounds: one O(E) two-sided label join + two census aggregates.",
       lpaModularitySql) { (s, d) =>
-      lpaModularity(lpaGraph(s, d))
+      lpaModularity(new Lpa(bipartiteEdges(s, d)))
     },
 
     GraftQuery(
@@ -824,14 +722,14 @@ object GraphOps {
         .select(col("e.u").as("u"), col("e.v").as("v"))
         .repartition(nDedup, col("u"), col("v")).distinct()
       val lpa = new Lpa(und)
-      if (lpa.arrayTier) {
+      if (lpa.g.arrayTier) {
         // the final-assignment census (n_nodes, max community size) falls
         // out of the same driver array the rounds already produced — the
         // two distributed aggregates (and their jobs) disappear
         val arr = lpa.labelsArray
         val (_, _, maxComm) = censusOfArray(arr)
         modularityFrom(lpa, lpa.perNodeDegSameArr(arr))
-          .select(lit(lpa.nodeCount).as("n_nodes"), col("m"),
+          .select(lit(lpa.g.nNodes).as("n_nodes"), col("m"),
             col("n_communities"), lit(maxComm).as("max_comm"), col("q_ppm"))
       } else {
         val lab = lpa.labels
@@ -864,9 +762,7 @@ object GraphOps {
         |      // (n * sxx - sx * sx) - 1000000 AS BIGINT) AS r_ppm
         |FROM g""".stripMargin) { (s, d) =>
       val dec = "decimal(38,0)"
-      val ps = Tables.lineitem(s, d)
-        .select((col("l_partkey") * 2).as("u"), (col("l_suppkey") * 2 + 1).as("v"))
-        .distinct()
+      val ps = bipartiteEdges(s, d)
       val e = ps.unionAll(ps.select(col("v").as("u"), col("u").as("v")))
       val deg = e.groupBy(col("u")).agg(count(lit(1)).as("dg"))
       val x = e
@@ -913,6 +809,21 @@ object GraphOps {
     """ps AS (SELECT DISTINCT l_partkey AS p, l_suppkey AS s FROM lineitem),
       |e AS MATERIALIZED (SELECT p*2 AS u, s*2+1 AS v FROM ps
       |      UNION ALL SELECT s*2+1 AS u, p*2 AS v FROM ps)""".stripMargin
+
+  /** Spark twin of [[bipartiteEdgesSql]], each undirected edge once: parts
+    * on even ids, suppliers on odd ids. */
+  private def bipartiteEdges(s: org.apache.spark.sql.SparkSession, d: String)
+      : org.apache.spark.sql.DataFrame =
+    Tables.lineitem(s, d)
+      .select((col("l_partkey") * 2).as("u"), (col("l_suppkey") * 2 + 1).as("v"))
+      .distinct()
+
+  /** The bipartite graph as an [[EdgeSet]] sized by the lineitem row count
+    * (an upper bound on its edges; no counting job). */
+  private def bipartiteGraph(s: org.apache.spark.sql.SparkSession, d: String)
+      : EdgeSet =
+    new EdgeSet(bipartiteEdges(s, d),
+      Some(graft.util.Sizing.parquetRowCount(d, "lineitem")))
 
   /** Shared WITH-chain prefix of the bipartite LPA oracles. */
   private def lpaChainSql: String = s"$bipartiteEdgesSql,\n$lpaRoundsSql"
@@ -973,20 +884,10 @@ object GraphOps {
        |  $qPpmSql
        |FROM g CROSS JOIN mm CROSS JOIN sic""".stripMargin
 
-  /** Node-count gate for the ZERO-EXCHANGE LPA round: up to this many
-    * nodes the O(V) label frame broadcasts each round (4M nodes ≈ 64 MB of
-    * (node, lab) longs — comfortably executor-resident; the sf10 graphs
-    * carry ~2.1M), above it the loop degrades to the shuffle form below.
-    * Per-session override for specs exercising the degradation path. */
-  private def lpaBroadcastNodes(s: org.apache.spark.sql.SparkSession): Long =
-    s.conf.getOption("graft.lpa.broadcastNodes").map(_.toLong)
-      .getOrElse(4000000L)
-
-  /** Shared LPA machinery for one query: takes the UNDIRECTED edge set
-    * (each edge once — symmetrization happens in here, against a cache, so
-    * an expensive derivation never cold-evaluates twice), partitions +
-    * persists the directed frame in the layout its round shape wants and
-    * serves the rounds.
+  /** Shared LPA machinery for one query over an [[EdgeSet]] built from the
+    * UNDIRECTED edge set (each edge once; the EdgeSet counts and caches the
+    * derivation, so an expensive one never cold-evaluates twice). Serves
+    * the rounds in the layout the EdgeSet's tier decision wants.
     *
     * Round shape (the r13 q335 finding — the native LabelModeAgg argmax
     * left the per-round O(E) edge⋈label exchange as the dominant term at
@@ -994,9 +895,7 @@ object GraphOps {
     * the edge frame persists hash-partitioned on u, the broadcast hash
     * join preserves that partitioning, and `groupBy(u)` runs partial+final
     * in the same stage, so NOTHING O(E) ever crosses the wire after the
-    * one-time repartition. The gate is the node count, measured ONCE per
-    * query from the initial label frame (an O(V) driver scalar — the same
-    * plan-time sizing job q304's bloom does): past [[lpaBroadcastNodes]]
+    * one-time repartition. Past [[EdgeSet.broadcastTier]]
     * the machinery falls back to v-partitioned edges, where the per-round
     * join reuses the persisted partitioning and only the census exchange
     * on u moves O(E)-bounded partial maps — the r13 shape, still one
@@ -1012,113 +911,40 @@ object GraphOps {
     * to the row_number-window and packed-max twins, and the oracle states
     * the same total (count DESC, label ASC) order). */
   private final class Lpa(undirected: org.apache.spark.sql.DataFrame) {
-    private val session = undirected.sparkSession
-    /** The undirected edge derivation CACHED before symmetrization: both
-      * union branches (u,v) and (v,u) read one materialization, so an
-      * expensive derivation (q335's 120M-pair projection at sf10) is
-      * computed exactly once — the r14 shape cold-evaluated eRaw twice
-      * (once under lab0's checkpoint, once under e's persist) and ran the
-      * projection's final dedup aggregate once per union branch on top.
-      * Unpersisted as soon as [[e]]/[[lab0]] are materialized below. */
-    private val und = undirected.persist()
-    /** Materializes the cache AND sizes every exchange below: the edge
-      * count is the one number that says how wide the u/v exchanges and
-      * the per-round census hash tables must be. 32 session-fixed
-      * partitions at sf10 meant ~9M-row hash tables per task (GC-bound —
-      * the r15 verdict's residual superlinear term in q335); the width
-      * now scales with the corpus via [[graft.util.Sizing]]. */
-    private val undN = und.count()
-    /** Undirected edge count — the one-time sizing count doubles as
-      * modularity's m, saving a full O(E) pass over the directed cache. */
-    val edgeCount: Long = undN
-    private val nE =
-      graft.util.Sizing.exchangePartitions(session, 2L * undN)
-    private val eRaw =
-      und.unionAll(und.select(col("v").as("u"), col("u").as("v")))
-    /** u-partitioned edges persisted FIRST — before the gate decision —
-      * so the one cold evaluation of the edge derivation happens exactly
-      * once, under this cache's materialization. */
-    private val eU = eRaw.repartition(nE, col("u")).persist()
-    /** Every node its own label — round 0, localCheckpointed because each
-      * round's O(V) output re-enters the next round's plan. Derived from
-      * the PERSISTED edges: distinct(u) over a u-partitioned cache is
-      * exchange-free (HashPartitioning(u) satisfies the grouping), and
-      * materializing it materializes the cache. */
-    val lab0: org.apache.spark.sql.DataFrame =
-      eU.select(col("u").as("node")).distinct()
-        .withColumn("lab", col("node")).localCheckpoint()
-    /** One sizing action yields BOTH gate inputs — the node count (the
-      * broadcast gate) and the max node id (the dense-id gate below) — plus
-      * the node-id sum, which is the identity assignment's census
-      * `sum_labels` (r20: the array tier computes per-round censuses on the
-      * driver from the collected assignment, and round 0's needs only this
-      * sum — no extra job). */
-    private val (nNodes, maxNodeId, idSum) = {
-      val r = lab0.agg(count(lit(1)), coalesce(max(col("node")), lit(-1L)),
-        coalesce(sum(col("node")), lit(0L))).head()
-      (r.getLong(0), r.getLong(1), r.getLong(2))
-    }
-    /** Node count / identity-assignment label sum, for driver-side round-0
-      * censuses in the array tier. */
-    val nodeCount: Long = nNodes
-    val nodeIdSum: Long = idSum
-    private val bcast = nNodes <= lpaBroadcastNodes(session)
-    /** PRIMITIVE-ARRAY tier gate (r17 verdict item 4): under the broadcast
-      * gate AND a dense node-id domain, the per-round label frame ships as
-      * one `Broadcast[Array[Long]]` indexed by node id — the round then
-      * has NO join at all: `groupBy(u).agg(labelMode(lookup(v)))` runs as
-      * one whole-stage-codegen aggregate over the u-partitioned edge
-      * cache, the label resolved by a codegen'd array index
-      * ([[org.apache.spark.sql.graft.LabelArrayLookup]]). The profiled
-      * sf10 constant this removes: 10-14 s/round building + probing a
-      * 2M-entry UnsafeRow broadcast hash relation. The id bound (default
-      * 2× the node gate → a ≤64 MB long array, the same budget the
-      * broadcast gate was sized to) keeps sparse id spaces on the
-      * broadcast-JOIN tier — correctness never depends on density, only
-      * the constant does. Override `graft.lpa.denseIdBound` to pin a tier
-      * in specs. */
-    private val arrayMode = bcast && maxNodeId >= 0 &&
-      maxNodeId < session.conf.getOption("graft.lpa.denseIdBound")
-        .map(_.toLong).getOrElse(2L * lpaBroadcastNodes(session))
+    val g = new EdgeSet(undirected)
+    /** Round 0, every node its own label. */
+    def lab0: org.apache.spark.sql.DataFrame =
+      g.degrees.select(col("u").as("node"), col("u").as("lab"))
 
     /** The assignment as a node-id-indexed long array (unassigned slots
       * -1; never probed — see [[org.apache.spark.sql.graft.LabelArrayLookup]]'s
-      * by-construction note). One O(V) collect per round, exactly what the
-      * engine's own broadcast build does, minus the hash relation. */
-    private def labelArray(lab: org.apache.spark.sql.DataFrame): Array[Long] = {
-      val arr = Array.fill[Long](maxNodeId.toInt + 1)(-1L)
-      graft.util.DriverCollect.foreachLongPair(
-        lab.select(col("node"), col("lab")))((n, l) => arr(n.toInt) = l)
-      arr
-    }
-    /** lookup(c) under a per-round broadcast of [[labelArray]]. */
-    private def lookupCol(
-        bc: org.apache.spark.broadcast.Broadcast[Array[Long]],
-        c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-      org.apache.spark.sql.graft.GraftShim.column(
-        org.apache.spark.sql.graft.LabelArrayLookup(
-          org.apache.spark.sql.graft.GraftShim.expression(c), bc))
-    /** Edge frame persisted pre-partitioned: on u when the rounds run
-      * zero-exchange (the groupBy(u) inherits it through the broadcast
-      * join), on v for the shuffle fallback (the per-round join reuses
-      * it and only the label frame moves) — re-partitioned FROM the
-      * u-cache, one extra O(E) exchange at construction, never a second
-      * cold evaluation of the edge derivation. */
+      * by-construction note). */
+    private def labelArray(lab: org.apache.spark.sql.DataFrame): Array[Long] =
+      g.collect(lab.select(col("node"), col("lab")), -1L)
+    /** Edge frame in the layout the rounds want: the EdgeSet's u-partitioned
+      * cache when the label frame broadcasts (the groupBy(u) inherits it
+      * through the broadcast join), else on v for the shuffle fallback (the
+      * per-round join reuses it and only the label frame moves) —
+      * re-partitioned FROM the u-cache, never a second cold evaluation of
+      * the edge derivation. */
     val e: org.apache.spark.sql.DataFrame =
-      if (bcast) { und.unpersist(); eU }
+      if (g.broadcastTier) g.edges
       else {
-        val ev = eU.repartition(nE, col("v")).persist()
+        val ev = g.edges.repartition(g.width, col("v")).persist()
         ev.count() // materialize from the u-cache before dropping it
-        und.unpersist()
-        eU.unpersist()
+        g.edges.unpersist()
         ev
       }
+    def release(): Unit = {
+      e.unpersist(false)
+      g.release()
+    }
     /** The label frame as a join side — broadcast under the gate. */
     def labSide(lab: org.apache.spark.sql.DataFrame,
                 nodeAs: String, labAs: String)
         : org.apache.spark.sql.DataFrame = {
       val side = lab.select(col("node").as(nodeAs), col("lab").as(labAs))
-      if (bcast) broadcast(side) else side
+      if (g.broadcastTier) broadcast(side) else side
     }
     /** One synchronous LPA round (see class doc). Array tier: no join —
       * the label resolves via a broadcast primitive-array index inside the
@@ -1127,11 +953,11 @@ object GraphOps {
       * cut the lineage, so nothing can re-evaluate against it). */
     def round(lab: org.apache.spark.sql.DataFrame)
         : org.apache.spark.sql.DataFrame =
-      if (arrayMode) {
-        val bc = session.sparkContext.broadcast(labelArray(lab))
+      if (g.arrayTier) {
+        val bc = g.session.sparkContext.broadcast(labelArray(lab))
         try e.groupBy(col("u"))
           .agg(graft.functions.GraftFunctions
-            .labelMode(lookupCol(bc, col("v"))).as("lab"))
+            .labelMode(EdgeSet.lookup(bc, col("v"))).as("lab"))
           .withColumnRenamed("u", "node")
           .localCheckpoint()
         finally bc.destroy()
@@ -1164,10 +990,10 @@ object GraphOps {
       * under its own action), so an eager destroy would break execution. */
     def perNodeDegSame(lab: org.apache.spark.sql.DataFrame)
         : org.apache.spark.sql.DataFrame =
-      if (arrayMode) {
-        val bc = session.sparkContext.broadcast(labelArray(lab))
-        e.select(col("u"), lookupCol(bc, col("u")).as("la"),
-            lookupCol(bc, col("v")).as("lb"))
+      if (g.arrayTier) {
+        val bc = g.session.sparkContext.broadcast(labelArray(lab))
+        e.select(col("u"), EdgeSet.lookup(bc, col("u")).as("la"),
+            EdgeSet.lookup(bc, col("v")).as("lb"))
           .groupBy(col("u"), col("la"))
           .agg(count(lit(1)).as("deg"),
             sum(when(col("la") === col("lb"), 1L).otherwise(0L)).as("same"))
@@ -1199,8 +1025,6 @@ object GraphOps {
     // on the driver from the same array, fixpoints detected by EXACT array
     // equality (strictly stronger than the xor fingerprint it replaces —
     // no collision caveat). Fallback tiers are untouched.
-    /** Whether the zero-exchange array tier is active (gate + dense ids). */
-    def arrayTier: Boolean = arrayMode
 
     /** Round 1 from the identity assignment, collected (see
       * [[roundIdentity]] for why min(v) is exact there). */
@@ -1211,11 +1035,11 @@ object GraphOps {
     /** One synchronous round, assignment in / assignment out — a single
       * Spark job (aggregate + primitive collect), no intermediate frame. */
     def roundArray(arr: Array[Long]): Array[Long] = {
-      val bc = session.sparkContext.broadcast(arr)
+      val bc = g.session.sparkContext.broadcast(arr)
       try labelArray(
         e.groupBy(col("u"))
           .agg(graft.functions.GraftFunctions
-            .labelMode(lookupCol(bc, col("v"))).as("lab"))
+            .labelMode(EdgeSet.lookup(bc, col("v"))).as("lab"))
           .withColumnRenamed("u", "node"))
       finally bc.destroy()
     }
@@ -1233,9 +1057,9 @@ object GraphOps {
       * overload's note). */
     def perNodeDegSameArr(arr: Array[Long])
         : org.apache.spark.sql.DataFrame = {
-      val bc = session.sparkContext.broadcast(arr)
-      e.select(col("u"), lookupCol(bc, col("u")).as("la"),
-          lookupCol(bc, col("v")).as("lb"))
+      val bc = g.session.sparkContext.broadcast(arr)
+      e.select(col("u"), EdgeSet.lookup(bc, col("u")).as("la"),
+          EdgeSet.lookup(bc, col("v")).as("lb"))
         .groupBy(col("u"), col("la"))
         .agg(count(lit(1)).as("deg"),
           sum(when(col("la") === col("lb"), 1L).otherwise(0L)).as("same"))
@@ -1261,24 +1085,11 @@ object GraphOps {
     (counts.size().toLong, sum, maxC)
   }
 
-  /** The bipartite LPA machinery (q326's census loop twin). */
-  private def lpaGraph(s: org.apache.spark.sql.SparkSession, d: String)
-      : Lpa = {
-    // corpus-sized dedup exchange (same fix family as q335's projection)
-    val nDedup = graft.util.Sizing.exchangePartitions(
-      s, graft.util.Sizing.parquetRowCount(d, "lineitem"))
-    val ps = Tables.lineitem(s, d)
-      .select((col("l_partkey") * 2).as("u"), (col("l_suppkey") * 2 + 1).as("v"))
-      .repartition(nDedup, col("u"), col("v"))
-      .distinct()
-    new Lpa(ps)
-  }
-
   /** Run the fixed LPA rounds on the tier-appropriate representation and
     * evaluate modularity — array tier: one job per round, the final
     * assignment feeds [[Lpa.perNodeDegSameArr]] with no extra collect. */
   private def lpaModularity(lpa: Lpa): org.apache.spark.sql.DataFrame =
-    if (lpa.arrayTier) modularityFrom(lpa, lpa.perNodeDegSameArr(lpa.labelsArray))
+    if (lpa.g.arrayTier) modularityFrom(lpa, lpa.perNodeDegSameArr(lpa.labelsArray))
     else modularityFrom(lpa, lpa.perNodeDegSame(lpa.labels))
 
   /** (n_communities, m, q_ppm) 1-row modularity frame — Spark twin of
@@ -1292,7 +1103,7 @@ object GraphOps {
     val dec = "decimal(38,0)"
     // m = |undirected edges| — already counted once when the Lpa sized its
     // exchanges; re-deriving it as e.count/2 would be a full O(E) pass
-    val m = lpa.e.sparkSession.range(1).select(lit(lpa.edgeCount).as("m"))
+    val m = lpa.e.sparkSession.range(1).select(lit(lpa.g.edgeCount).as("m"))
     // ONE pass over the O(E) cache computes BOTH modularity ingredients
     // (r16 — deg and sic were two separate full passes): per (u, la) the
     // degree AND the same-label endpoint count ride one aggregate; the

@@ -100,23 +100,34 @@ object PipelineOps {
   // test (strictly stronger than the xor fingerprint). Past the gate the
   // distributed loops below run unchanged.
 
+  /** The driver tier's edge budget: `graft.components.driverEdgeBound`
+    * (default 2M ⇒ ≤64 MB of labels shipped back, the LPA broadcast
+    * budget), clamped to [[graft.util.DriverCollect.MaxEntries]]. `0`
+    * forces the distributed tier (specs pin tier equality with it). */
+  private[graft] def driverEdgeBound(conf: org.apache.spark.sql.RuntimeConfig)
+      : Long =
+    math.min(graft.util.DriverCollect.MaxEntries,
+      conf.getOption("graft.components.driverEdgeBound")
+        .map(_.toLong).getOrElse(2000000L))
+
+  /** Whether an edge frame of `nEdges` edges with endpoint ids in
+    * `[minId, maxId]` runs on the driver: within `bound` AND inside the
+    * 31-bit encode domain. */
+  private[graft] def driverTier(bound: Long, nEdges: Long, minId: Long,
+                                maxId: Long): Boolean =
+    bound > 0L && nEdges <= bound && minId >= 0L && maxId < (1L << 31)
+
   /** Collect an edge frame as encoded `(a << 32) | b` longs if it fits the
-    * driver tier: edge count within budget (default 2M ⇒ ≤64 MB of labels
-    * shipped back, the LPA broadcast budget) AND ids inside the 31-bit
-    * encode domain. `graft.components.driverEdgeBound=0` forces the
-    * distributed tier (specs pin tier equality with it). */
+    * driver tier ([[driverTier]]). */
   private def driverTierEdges(e: DataFrame, a: String, b: String)
       : Option[Array[Long]] = {
-    val s = e.sparkSession
-    val bound = s.conf.getOption("graft.components.driverEdgeBound")
-      .map(_.toLong).getOrElse(2000000L)
-    if (bound <= 0L) None
+    val bound = driverEdgeBound(e.sparkSession.conf)
+    if (bound <= 0L) None // forced distributed: skip the gate job
     else {
       val r = e.agg(count(lit(1)),
-        coalesce(max(greatest(col(a), col(b))), lit(-1L)),
-        coalesce(min(least(col(a), col(b))), lit(0L))).head()
-      if (r.getLong(0) > bound || r.getLong(1) >= (1L << 31) ||
-        r.getLong(2) < 0L) None
+        coalesce(min(least(col(a), col(b))), lit(0L)),
+        coalesce(max(greatest(col(a), col(b))), lit(-1L))).head()
+      if (!driverTier(bound, r.getLong(0), r.getLong(1), r.getLong(2))) None
       else {
         val bld = new scala.collection.mutable.ArrayBuilder.ofLong
         graft.util.DriverCollect.foreachLongPair(e.select(col(a), col(b)))(
@@ -210,7 +221,12 @@ object PipelineOps {
     * order-invariant (count, bit_xor of xxhash64(u,v)) fingerprint repeats
     * across one full L+S alternation — at the fixpoint the edges form a
     * star forest with every component's min-id node at the center, and the
-    * star edges ARE the label assignment. */
+    * star edges ARE the label assignment.
+    *
+    * Contract, both tiers (as [[connectedComponents]] on symmetric edges):
+    * edges are undirected, the vertex set is `nodes` ∪ every edge
+    * endpoint, and the result is one `(node, label)` row per row of
+    * `nodes`, label = the minimum id of its component. */
   private[graft] def largeSmallStarComponents(nodes: DataFrame,
                                               edges: DataFrame,
                                               maxIters: Int = 30): DataFrame = {
@@ -288,9 +304,16 @@ object PipelineOps {
       .select(col("node"), coalesce(col("lab"), col("node")).as("label"))
   }
 
-  /** Min-label propagation to fixpoint: label(n) ← min(label(n),
-    * min over neighbors' labels); converged when Σlabel stops falling
-    * (labels are monotone non-increasing with a fixed node set). */
+  /** Min-label propagation to fixpoint: label(src) ← min(label(src),
+    * label(dst)) over the DIRECTED `(src, dst)` edges, so undirected
+    * components need both directions of each edge; converged when Σlabel
+    * stops falling (labels are monotone non-increasing with a fixed node
+    * set).
+    *
+    * Contract, both tiers: the vertex set is `nodes` ∪ every edge
+    * endpoint, each starting with its own id as its label; the result is
+    * one `(node, label)` row per row of `nodes` (left join), so endpoints
+    * outside `nodes` carry labels through but are not reported. */
   private[graft] def connectedComponents(nodes: DataFrame, edges: DataFrame,
                                          maxIters: Int = 20): DataFrame = {
     val eDriver = edges.localCheckpoint()
@@ -334,9 +357,17 @@ object PipelineOps {
           .select(col("node"), coalesce(col("lab"), col("node")).as("label"))
       case None => ()
     }
-    var labels = nodes.select(col("node"), col("node").as("label")).localCheckpoint()
+    // every endpoint is a vertex too (the driver tier's contract above)
+    var labels = nodes.select(col("node"))
+      .unionAll(eDriver.select(col("src").as("node")))
+      .unionAll(eDriver.select(col("dst").as("node")))
+      .distinct()
+      .select(col("node"), col("node").as("label")).localCheckpoint()
     val e = eDriver
-    var lastSum = labels.agg(sum(col("label"))).head.getLong(0)
+    // 0 for an empty vertex set (sum over no rows is null)
+    def labelSum(f: DataFrame): Long =
+      f.agg(coalesce(sum(col("label")), lit(0L))).head.getLong(0)
+    var lastSum = labelSum(labels)
     var converged = false
     var iter = 0
     while (!converged && iter < maxIters) {
@@ -345,14 +376,14 @@ object PipelineOps {
       val next = labels.union(prop)
         .groupBy(col("node")).agg(min(col("label")).as("label"))
         .localCheckpoint()
-      val s = next.agg(sum(col("label"))).head.getLong(0)
+      val s = labelSum(next)
       converged = s == lastSum
       lastSum = s
       labels = next
       iter += 1
     }
     require(converged, s"connected components did not converge in $maxIters rounds")
-    labels
+    nodes.join(labels, Seq("node"), "left")
   }
 
   def queries: Seq[GraftQuery] = Seq(

@@ -1,6 +1,7 @@
 package graft.util
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.types.LongType
 
 /** Primitive collect for the graph array tiers (guide §5 — the driver
   * should do almost no data work, and what it does must not allocate 10×
@@ -17,16 +18,29 @@ import org.apache.spark.sql.DataFrame
   */
 object DriverCollect {
 
+  /** Hard ceiling, in entries, on any array a driver gate lets onto the
+    * driver (16M longs = 128 MB): the graph tier confs are clamped to it, so
+    * no setting can size a driver array past it. */
+  val MaxEntries: Long = 1L << 24
+
   /** Each partition of a two-LONG-column frame as one interleaved
-    * primitive array `[k0, v0, k1, v1, …]`. Columns must be non-null
-    * longs (every caller's frames are key/count aggregates by
-    * construction). */
-  def longPairChunks(df: DataFrame): Array[Array[Long]] =
+    * primitive array `[k0, v0, k1, v1, …]`. Any other schema, and any null
+    * cell, throws: an int column or a null slot would read as garbage
+    * through `getLong`. */
+  def longPairChunks(df: DataFrame): Array[Array[Long]] = {
+    val types = df.schema.fields.map(_.dataType).toSeq
+    require(types == Seq(LongType, LongType),
+      s"longPairChunks needs exactly two LONG columns, got ${df.schema.simpleString}")
     df.queryExecution.toRdd.mapPartitions { it =>
       val b = new scala.collection.mutable.ArrayBuilder.ofLong
-      it.foreach { r => b += r.getLong(0); b += r.getLong(1) }
+      it.foreach { r =>
+        if (r.isNullAt(0) || r.isNullAt(1))
+          throw new IllegalArgumentException("longPairChunks: null cell")
+        b += r.getLong(0); b += r.getLong(1)
+      }
       Iterator.single(b.result())
     }.collect()
+  }
 
   /** Apply `f(key, value)` to every row of a two-long-column frame,
     * driver-side, without boxing a Row per element. */

@@ -394,11 +394,11 @@ object HilbertIndex {
   * constant at sf10: building the hash relation + GC over 2M boxed rows).
   *
   * Index safety is BY CONSTRUCTION, stated not assumed: the array covers
-  * [0, maxNodeId] of the SAME symmetrized edge frame the round aggregates,
+  * [0, maxId] of the SAME symmetrized edge frame the round aggregates,
   * and the label frame assigns every distinct endpoint — so every probe
-  * `v` indexes an assigned slot. The dense-id gate (`maxId` bounded by
-  * [[graft.ops.GraphOps]]'s array budget) is what keeps the array small;
-  * sparse id spaces fall back to the broadcast-join tier unchanged. */
+  * `v` indexes an assigned slot. The dense-id gate
+  * ([[graft.ops.EdgeSet.arrayTier]]: ids in `[0, idBound)`) is what keeps
+  * the array small; sparse id spaces fall back to the other tiers. */
 case class LabelArrayLookup(child: Expression,
     bc: org.apache.spark.broadcast.Broadcast[Array[Long]])
     extends UnaryExpression with ExpectsInputTypes {
